@@ -15,14 +15,17 @@ needs a family of strategies, each with a different cost/recall point:
   operators/similarity.py for the bucketing).
 
 Everything is DataFrame-native: shuffles only on narrow derived keys,
-no driver-side loops, no UDFs.
+no driver-side loops. The one exception to pure-Column plans is the
+near-dup signature: MinHash and SimHash values come from the Arrow
+UDFs in functions/fast_text.py (bit-identical to ``with_minhash`` /
+``with_simhash``, ~5x faster per row).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import textfns
@@ -177,16 +180,23 @@ def drop_duplicate_rows(
             F.broadcast(dup_fps), [fp_cols[0]], "left_semi"
         ).dropDuplicates(list(fp_cols))
         return uniques.unionByName(survivors).drop(*fp_cols)
+    return _drop_fp_duplicates(fingerprinted, cols, fp_cols).drop(*fp_cols)
+
+
+def _drop_fp_duplicates(
+    fingerprinted: DataFrame, cols: Sequence[str] | None, fp_cols: Sequence[str]
+) -> DataFrame:
+    """One row per fingerprint of a :func:`with_row_fingerprint` frame.
+
+    Whole-row dedup (``cols=None``) groups on ALL columns (the fps are
+    functions of the row, so the groups are identical), which compiles
+    to a keys-only Tungsten HashAggregate; ``dropDuplicates`` on just
+    the fp subset would plan a SortAggregate carrying a wide
+    ``first()`` per column (measured ~2x slower on lineitem). A column
+    subset dedups on the fps."""
     if cols is None:
-        # whole-row dedup: grouping on ALL columns (fps are functions of
-        # the row, so groups are identical) compiles to a keys-only
-        # Tungsten HashAggregate; dropDuplicates on just the fp subset
-        # would plan a SortAggregate carrying a wide first() per column
-        # (measured ~2x slower on lineitem)
-        deduped = fingerprinted.dropDuplicates()
-    else:
-        deduped = fingerprinted.dropDuplicates(list(fp_cols))
-    return deduped.drop(*fp_cols)
+        return fingerprinted.dropDuplicates()
+    return fingerprinted.dropDuplicates(list(fp_cols))
 
 
 def batch_minus_store(
@@ -268,15 +278,7 @@ def incremental_exact_dedup(
     ingest shape).
     """
     fp_cols = ["__fp0", "__fp1"]
-    fingerprinted = with_row_fingerprint(new_df, cols)
-    # all-column grouping for whole-row dedup: keys-only HashAggregate
-    # instead of a wide first()-carrying SortAggregate (see
-    # drop_duplicate_rows)
-    batch = (
-        fingerprinted.dropDuplicates()
-        if cols is None
-        else fingerprinted.dropDuplicates(fp_cols)
-    )
+    batch = _drop_fp_duplicates(with_row_fingerprint(new_df, cols), cols, fp_cols)
     if cache_into is not None:
         batch = batch.persist()
         cache_into.append(batch)
@@ -472,20 +474,15 @@ def minhash_candidates(
     then a self-equi-join on (band_idx, band_key), with hot buckets
     routed through the blocked join in :func:`banded_pairs` (boilerplate
     skew guard; identical pair set).
+
+    Raises ValueError unless ``bands >= 1`` and ``rows_per_band >= 1``.
     """
-    band_rows = []
-    for b in range(bands):
-        key = F.array_join(
-            F.transform(
-                F.slice(F.col(sig_col), b * rows_per_band + 1, rows_per_band),
-                lambda x: x.cast("string"),
-            ),
-            "-",
-        )
-        band_rows.append(F.struct(F.lit(b).alias("band"), key.alias("key")))
-    exploded = df.select(
-        F.col(id_col).alias("doc"), F.explode(F.array(*band_rows)).alias("bk")
-    ).select("doc", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    if rows_per_band < 1:
+        raise ValueError(f"rows_per_band must be >= 1, got {rows_per_band}")
+    exploded = _minhash_bands(
+        df, sig_col, bands * rows_per_band, bands,
+        doc=F.col(id_col).alias("doc"), carry=False,
+    )
     return banded_pairs(exploded).distinct()
 
 
@@ -498,7 +495,6 @@ def minhash_near_duplicates(
     shingle_n: int = 3,
     bands: int = 4,
     threshold: float = 0.7,
-    arrow: bool = True,
     hot_threshold: int = 64,
     num_blocks: int = 8,
 ) -> DataFrame:
@@ -509,9 +505,10 @@ def minhash_near_duplicates(
     the band explode, so the expensive text→signature fold is evaluated
     once per side of the self-join — no join-back to the corpus.
 
-    ``arrow=True`` (default) computes signatures via the numpy pandas
-    UDF (functions/fast_text.py) — bit-identical values (same oracle),
-    ~5x faster per row; set False for a pure-JVM plan.
+    Signatures come from the numpy pandas UDF (functions/fast_text.py)
+    — bit-identical to :func:`with_minhash` (same oracle), ~5x faster
+    per row. ``bands`` must divide ``num_hashes`` (ValueError
+    otherwise; see :func:`_minhash_bands`).
 
     The signature frame is repartitioned before the self-join: both
     join sides then read the SAME shuffle output (AQE stage reuse), so
@@ -523,45 +520,14 @@ def minhash_near_duplicates(
     self-join (:func:`banded_pairs`) — same pair set, bounded task size
     under boilerplate skew.
     """
-    rows_per_band = num_hashes // bands
-    if arrow:
-        from ..functions.fast_text import with_minhash_fast
-
-        sigs = with_minhash_fast(
-            df.select(id_col, text_col), text_col,
-            num_hashes=num_hashes, shingle_n=shingle_n,
-        ).select(F.col(id_col).alias("doc"), "minhash")
-    else:
-        sigs = with_minhash(
-            df.select(id_col, text_col), text_col,
-            num_hashes=num_hashes, shingle_n=shingle_n,
-        ).select(F.col(id_col).alias("doc"), "minhash")
-    sigs = sigs.repartition("doc")
-    band_rows = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.array_join(
-                F.transform(
-                    F.slice(F.col("minhash"), b * rows_per_band + 1, rows_per_band),
-                    lambda x: x.cast("string"),
-                ),
-                "-",
-            ).alias("key"),
-        )
-        for b in range(bands)
-    ]
-    exploded = sigs.select(
-        "doc", "minhash", F.explode(F.array(*band_rows)).alias("bk")
-    ).select("doc", "minhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    sigs = _minhash_sigs(
+        df, text_col, id_col, num_hashes=num_hashes, shingle_n=shingle_n
+    ).repartition("doc")
+    exploded = _minhash_bands(sigs, "minhash", num_hashes, bands)
     pairs = banded_pairs(
         exploded, "minhash", hot_threshold=hot_threshold, num_blocks=num_blocks
     )
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("minhash_a"), F.col("minhash_b"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
+    agree = _slot_agreement(F.col("minhash_a"), F.col("minhash_b"))
     est = agree.cast("double") / F.lit(float(num_hashes))
     return (
         pairs.select("id_a", "id_b", est.alias("est_jaccard"))
@@ -578,49 +544,75 @@ def release_caches(frames: list) -> None:
         frames.pop().unpersist()
 
 
-def _banded_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    num_hashes: int,
-    shingle_n: int,
-    bands: int,
-    arrow: bool,
+def _minhash_sigs(
+    df: DataFrame, text_col: str, id_col: str, *, num_hashes: int, shingle_n: int
 ) -> DataFrame:
-    """(doc, minhash, band, key) banded signature table for a corpus —
-    the persistable representation incremental near-dup joins against."""
-    rows_per_band = num_hashes // bands
-    if arrow:
-        from ..functions.fast_text import with_minhash_fast
+    """(doc, minhash) signatures from the Arrow kernel
+    (functions/fast_text.py; bit-identical to :func:`with_minhash`)."""
+    from ..functions.fast_text import with_minhash_fast
 
-        sigs = with_minhash_fast(
-            df.select(id_col, text_col), text_col,
-            num_hashes=num_hashes, shingle_n=shingle_n,
-        ).select(F.col(id_col).alias("doc"), "minhash")
-    else:
-        sigs = with_minhash(
-            df.select(id_col, text_col), text_col,
-            num_hashes=num_hashes, shingle_n=shingle_n,
-        ).select(F.col(id_col).alias("doc"), "minhash")
-    band_rows = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.array_join(
-                F.transform(
-                    F.slice(F.col("minhash"), b * rows_per_band + 1, rows_per_band),
-                    lambda x: x.cast("string"),
-                ),
-                "-",
-            ).alias("key"),
+    return with_minhash_fast(
+        df.select(id_col, text_col), text_col,
+        num_hashes=num_hashes, shingle_n=shingle_n,
+    ).select(F.col(id_col).alias("doc"), "minhash")
+
+
+def _explode_bands(
+    sigs: DataFrame,
+    keys: Sequence[Column],
+    *,
+    doc: Column | str = "doc",
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """Banded table ``(doc, *carry, band, key)``: one row per doc and
+    band, band ``i`` keyed by ``keys[i]`` — the linear explode every
+    banded self-join and band store is built from."""
+    rows = [F.struct(F.lit(b).alias("band"), k.alias("key")) for b, k in enumerate(keys)]
+    return sigs.select(doc, *carry, F.explode(F.array(*rows)).alias("bk")).select(
+        "doc", *carry, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    )
+
+
+def _minhash_bands(
+    sigs: DataFrame,
+    sig_col: str,
+    num_slots: int,
+    bands: int,
+    *,
+    doc: Column | str = "doc",
+    carry: bool = True,
+) -> DataFrame:
+    """MinHash LSH banding of the ``num_slots``-slot array ``sig_col``:
+    band ``b`` keys on its ``num_slots // bands`` consecutive slots, cast
+    to string and joined with ``-``. The band store persists that key
+    string, so it must stay byte-for-byte stable. The signature rides
+    along unless ``carry=False``.
+
+    Raises ValueError unless ``1 <= bands`` and ``bands`` divides
+    ``num_slots``: more bands than slots makes every key ``""`` (every
+    doc collides with every other — an all-pairs join), and a remainder
+    silently leaves slots out of banding."""
+    if bands < 1 or num_slots < bands or num_slots % bands:
+        raise ValueError(
+            f"bands={bands} must be >= 1 and divide the {num_slots}-slot signature"
+        )
+    rpb = num_slots // bands
+    keys = [
+        F.array_join(
+            F.transform(
+                F.slice(F.col(sig_col), b * rpb + 1, rpb), lambda x: x.cast("string")
+            ),
+            "-",
         )
         for b in range(bands)
     ]
-    return sigs.select(
-        "doc", "minhash", F.explode(F.array(*band_rows)).alias("bk")
-    ).select(
-        "doc", "minhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
+    return _explode_bands(sigs, keys, doc=doc, carry=[sig_col] if carry else [])
+
+
+def _slot_agreement(a: Column, b: Column) -> Column:
+    """Number of slots on which signature arrays ``a`` and ``b`` agree —
+    the numerator of every MinHash Jaccard estimator."""
+    return F.size(F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda eq: eq))
 
 
 def incremental_minhash_near_duplicates(
@@ -633,7 +625,6 @@ def incremental_minhash_near_duplicates(
     shingle_n: int = 3,
     bands: int = 4,
     threshold: float = 0.7,
-    arrow: bool = True,
     cache_into: list | None = None,
     fresh_into: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -654,18 +645,16 @@ def incremental_minhash_near_duplicates(
     never re-read. Results equal a full recompute over the union
     corpus, restricted to pairs touching the new batch.
     """
-    new_banded = _banded_signatures(
-        new_df, text_col, id_col,
-        num_hashes=num_hashes, shingle_n=shingle_n, bands=bands, arrow=arrow,
-    ).persist()  # three consumers (within l/r, versus); see banded_pairs
+    sigs = _minhash_sigs(
+        new_df, text_col, id_col, num_hashes=num_hashes, shingle_n=shingle_n
+    )
+    # three consumers (within l/r, versus); see banded_pairs
+    new_banded = _minhash_bands(sigs, "minhash", num_hashes, bands).persist()
     if cache_into is not None:
         cache_into.append(new_banded)
 
     def est(a, b):
-        agree = F.size(
-            F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda eq: eq)
-        )
-        return agree.cast("double") / F.lit(float(num_hashes))
+        return _slot_agreement(a, b).cast("double") / F.lit(float(num_hashes))
 
     # ingest orientation (the batch_minus_store/SemDeDup rule): the
     # batch is the small side — broadcast it on the self-join and the
@@ -793,7 +782,6 @@ def simhash_near_duplicates(
     max_hamming: int = 3,
     bands: int = 4,
     shingle_n: int | None = None,
-    arrow: bool = True,
     hot_threshold: int = 64,
     num_blocks: int = 8,
 ) -> DataFrame:
@@ -802,39 +790,35 @@ def simhash_near_duplicates(
     Candidate generation: split the fingerprint into ``bands`` bit
     slices; by pigeonhole, any pair within distance < bands shares at
     least one exact slice → equi-join per slice (linear), then exact
-    Hamming check via popcount on the XOR. Requires bands > max_hamming.
-    Hot slice buckets route through the blocked join in
-    :func:`banded_pairs` (skew guard, identical pair set).
+    Hamming check via popcount on the XOR. Requires
+    max_hamming < bands <= bits (ValueError otherwise): more bands than
+    bits makes every slice zero bits wide, so every doc lands in one
+    bucket. Signatures come from the Arrow UDF (functions/fast_text.py;
+    bit-identical to :func:`with_simhash`). Hot slice buckets route
+    through the blocked join in :func:`banded_pairs` (skew guard,
+    identical pair set).
     """
     if bands <= max_hamming:
         raise ValueError("need bands > max_hamming for pigeonhole completeness")
-    slice_bits = bits // bands
-    if arrow:
-        from ..functions.fast_text import simhash_udf
+    if bands > bits:
+        raise ValueError(f"bands={bands} exceeds bits={bits}: zero-bit slices")
+    from ..functions.fast_text import simhash_udf
 
-        sigs = df.select(
-            F.col(id_col).alias("doc"),
-            simhash_udf(bits, shingle_n)(F.col(text_col)).alias("simhash"),
-        )
-    else:
-        sigs = with_simhash(
-            df.select(id_col, text_col), text_col, bits=bits, shingle_n=shingle_n
-        ).select(F.col(id_col).alias("doc"), "simhash")
+    slice_bits = bits // bands
+    sigs = df.select(
+        F.col(id_col).alias("doc"),
+        simhash_udf(bits, shingle_n)(F.col(text_col)).alias("simhash"),
+    )
     # one shuffle both join sides reuse (AQE stage reuse) — see
     # minhash_near_duplicates
     sigs = sigs.repartition("doc")
     slices = [
-        F.struct(
-            F.lit(i).alias("band"),
-            F.shiftright(F.col("simhash"), i * slice_bits)
-            .bitwiseAND(F.lit((1 << slice_bits) - 1))
-            .alias("key"),
+        F.shiftright(F.col("simhash"), i * slice_bits).bitwiseAND(
+            F.lit((1 << slice_bits) - 1)
         )
         for i in range(bands)
     ]
-    exploded = sigs.select(
-        "doc", "simhash", F.explode(F.array(*slices)).alias("bk")
-    ).select("doc", "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    exploded = _explode_bands(sigs, slices, carry=["simhash"])
     pairs = banded_pairs(
         exploded, "simhash", hot_threshold=hot_threshold, num_blocks=num_blocks
     )
@@ -1642,7 +1626,6 @@ def bbit_minhash_near_duplicates(
     shingle_n: int = 3,
     bands: int = 4,
     threshold: float = 0.5,
-    arrow: bool = True,
     hot_threshold: int = 64,
     num_blocks: int = 8,
 ) -> DataFrame:
@@ -1660,55 +1643,24 @@ def bbit_minhash_near_duplicates(
     per-row projection (never stored or shuffled); banding, the skew-
     guarded self-join, and the slot-agreement fold all read the b-bit
     array. More slots at fewer bits holds estimator variance while
-    shrinking bytes — the paper's core trade.
+    shrinking bytes — the paper's core trade. ``bands`` must divide
+    ``num_hashes`` (ValueError otherwise; see :func:`_minhash_bands`).
     """
     mask_mod = 1 << b_bits
-    rows_per_band = num_hashes // bands
-    if arrow:
-        from ..functions.fast_text import with_minhash_fast
-
-        sigs = with_minhash_fast(
-            df.select(id_col, text_col), text_col,
-            num_hashes=num_hashes, shingle_n=shingle_n,
-        ).select(F.col(id_col).alias("doc"), "minhash")
-    else:
-        sigs = with_minhash(
-            df.select(id_col, text_col), text_col,
-            num_hashes=num_hashes, shingle_n=shingle_n,
-        ).select(F.col(id_col).alias("doc"), "minhash")
+    sigs = _minhash_sigs(
+        df, text_col, id_col, num_hashes=num_hashes, shingle_n=shingle_n
+    )
     bb = sigs.select(
         "doc",
         F.transform(
             "minhash", lambda h: (h % F.lit(mask_mod)).cast("int")
         ).alias("bb"),
     ).repartition("doc")
-    band_rows = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.array_join(
-                F.transform(
-                    F.slice(F.col("bb"), b * rows_per_band + 1, rows_per_band),
-                    lambda x: x.cast("string"),
-                ),
-                "-",
-            ).alias("key"),
-        )
-        for b in range(bands)
-    ]
-    exploded = bb.select(
-        "doc", "bb", F.explode(F.array(*band_rows)).alias("bk")
-    ).select(
-        "doc", "bb", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
+    exploded = _minhash_bands(bb, "bb", num_hashes, bands)
     pairs = banded_pairs(
         exploded, "bb", hot_threshold=hot_threshold, num_blocks=num_blocks
     )
-    n_match = F.size(
-        F.filter(
-            F.zip_with(F.col("bb_a"), F.col("bb_b"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
+    n_match = _slot_agreement(F.col("bb_a"), F.col("bb_b"))
     collision = 1.0 / float(mask_mod)
     p = n_match.cast("double") / F.lit(float(num_hashes))
     est = (p - F.lit(collision)) / F.lit(1.0 - collision)

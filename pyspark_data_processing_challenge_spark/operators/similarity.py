@@ -14,6 +14,8 @@ North-star extension (SURVEY.md §7.4). Two tiers:
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 
 from pyspark.sql import Column, DataFrame, Window
@@ -141,19 +143,56 @@ def ivf_assign(
     cb = centroids.select(
         F.col(centroid_id).alias("cid"), F.col(centroid_vec).alias("cv")
     )
+    return _nearest_centroid(c, cb, ["doc"])
+
+
+def _nearest_centroid(
+    c: DataFrame,
+    cb: DataFrame,
+    keys: Sequence[str],
+    payload: Sequence[str] = ("vec",),
+) -> DataFrame:
+    """The IVF assignment rule: per group of ``keys`` in ``c`` (which
+    holds ``vec``), the centroid of the broadcast codebook ``cb``
+    (cid, cv) with the highest cosine, ties going to the smaller
+    centroid id — a ``max_by`` over ``(cos, -cid)`` (see
+    :func:`ivf_assign` for why not a window). Columns functionally
+    dependent on the doc may join ``keys`` to ride through. Output:
+    (*keys, *payload, centroid_id)."""
     scored = c.join(F.broadcast(cb)).select(
-        "doc", "vec", "cid", vectors.cosine(F.col("vec"), F.col("cv")).alias("cos")
+        *c.columns, "cid", vectors.cosine(F.col("vec"), F.col("cv")).alias("cos")
     )
-    best = scored.groupBy("doc").agg(
+    best = scored.groupBy(*keys).agg(
         F.max_by(
-            F.struct(F.col("cid"), F.col("vec")),
+            F.struct(F.col("cid"), *[F.col(p) for p in payload]),
             F.struct(F.col("cos"), (-F.col("cid")).alias("__nc")),
         ).alias("__best")
     )
     return best.select(
-        "doc",
-        F.col("__best.vec").alias("vec"),
+        *keys,
+        *[F.col(f"__best.{p}").alias(p) for p in payload],
         F.col("__best.cid").alias("centroid_id"),
+    )
+
+
+def _probe_table(
+    queries: DataFrame,
+    cb: DataFrame,
+    nprobe: int,
+    carry: Sequence[str],
+    *,
+    rank_col: str = "__rn",
+) -> DataFrame:
+    """The IVF probe rule: each query's ``nprobe`` nearest centroids of
+    the broadcast codebook ``cb`` (cid, cv) by cosine, ties going to
+    the smaller centroid id. ``queries`` holds ``query_id`` and
+    ``qvec``. Output: (*carry, cid, qcos, rank_col), rank 1..nprobe."""
+    qscored = queries.join(F.broadcast(cb)).select(
+        *carry, "cid", vectors.cosine(F.col("qvec"), F.col("cv")).alias("qcos")
+    )
+    wq = Window.partitionBy("query_id").orderBy(F.col("qcos").desc(), F.col("cid"))
+    return qscored.withColumn(rank_col, F.row_number().over(wq)).filter(
+        F.col(rank_col) <= nprobe
     )
 
 
@@ -872,15 +911,8 @@ def ivf_topk(
         centroid_vec="cv",
     )
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    qscored = q.join(F.broadcast(cb)).select(
-        "query_id", "qvec", "cid",
-        vectors.cosine(F.col("qvec"), F.col("cv")).alias("qcos"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("qcos").desc(), F.col("cid"))
-    probes = (
-        qscored.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= nprobe)
-        .select("query_id", "qvec", F.col("cid").alias("centroid_id"))
+    probes = _probe_table(q, cb, nprobe, q.columns).select(
+        "query_id", "qvec", F.col("cid").alias("centroid_id")
     )
     cand = assigned.join(F.broadcast(probes), "centroid_id").filter(
         F.col("query_id") != F.col("doc")
@@ -948,48 +980,17 @@ def ivf_filtered_topk(
         F.col(vec_col).alias("vec"),
         F.col(meta_col).alias("__meta"),
     )
-    scored = c.join(F.broadcast(cb)).select(
-        "doc",
-        "vec",
-        "__meta",
-        "cid",
-        vectors.cosine(F.col("vec"), F.col("cv")).alias("cos"),
-    )
     # meta is functionally dependent on doc — adding it to the group
     # key keeps the argmax map-side combinable at unchanged key
     # cardinality while carrying the metadata through assignment
-    assigned = scored.groupBy("doc", "__meta").agg(
-        F.max_by(
-            F.struct(F.col("cid"), F.col("vec")),
-            F.struct(F.col("cos"), (-F.col("cid")).alias("__nc")),
-        ).alias("__best")
-    ).select(
-        "doc",
-        "__meta",
-        F.col("__best.vec").alias("vec"),
-        F.col("__best.cid").alias("centroid_id"),
-    )
+    assigned = _nearest_centroid(c, cb, ["doc", "__meta"])
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
         F.col(want_col).alias("__want"),
     )
-    qscored = q.join(F.broadcast(cb)).select(
-        "query_id",
-        "qvec",
-        "__want",
-        "cid",
-        vectors.cosine(F.col("qvec"), F.col("cv")).alias("qcos"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("qcos").desc(), F.col("cid")
-    )
-    probes = (
-        qscored.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= nprobe)
-        .select(
-            "query_id", "qvec", F.col("cid").alias("__pcid"), "__want"
-        )
+    probes = _probe_table(q, cb, nprobe, q.columns).select(
+        "query_id", "qvec", F.col("cid").alias("__pcid"), "__want"
     )
     cand = assigned.join(
         F.broadcast(probes),
@@ -1175,20 +1176,8 @@ def ivf_topk_curve(
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
-    qscored = q.join(F.broadcast(cb)).select(
-        "query_id", "qvec", "cid",
-        vectors.cosine(F.col("qvec"), F.col("cv")).alias("qcos"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("qcos").desc(), F.col("cid")
-    )
-    probes = (
-        qscored.withColumn("probe_rank", F.row_number().over(wq))
-        .filter(F.col("probe_rank") <= pmax)
-        .select(
-            "query_id", "qvec", "probe_rank",
-            F.col("cid").alias("centroid_id"),
-        )
+    probes = _probe_table(q, cb, pmax, q.columns, rank_col="probe_rank").select(
+        "query_id", "qvec", "probe_rank", F.col("cid").alias("centroid_id")
     )
     cand = (
         assigned.join(F.broadcast(probes), "centroid_id")

@@ -927,19 +927,9 @@ def ivf_filtered_cost_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("vec"),
             meta.alias("__meta"),
         )
-        scored = c.join(F.broadcast(cb)).select(
-            "doc",
-            "vec",
-            "__meta",
-            "cid",
-            vectors.cosine(F.col("vec"), F.col("cv")).alias("cos"),
+        assigned = similarity._nearest_centroid(
+            c, cb, ["doc", "__meta"], payload=()
         )
-        assigned = scored.groupBy("doc", "__meta").agg(
-            F.max_by(
-                F.struct(F.col("cid")),
-                F.struct(F.col("cos"), (-F.col("cid")).alias("__nc")),
-            ).alias("__best")
-        ).select("doc", "__meta", F.col("__best.cid").alias("centroid_id"))
         q = emb.filter(
             (F.col("vec_id") >= IVF_QUERY_LO)
             & (F.col("vec_id") < IVF_QUERY_HI)
@@ -948,20 +938,9 @@ def ivf_filtered_cost_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("qvec"),
             meta.alias("__want"),
         )
-        qscored = q.join(F.broadcast(cb)).select(
-            "query_id",
-            "__want",
-            "cid",
-            vectors.cosine(F.col("qvec"), F.col("cv")).alias("qcos"),
-        )
-        wq = Window.partitionBy("query_id").orderBy(
-            F.col("qcos").desc(), F.col("cid")
-        )
-        probes = (
-            qscored.withColumn("__rn", F.row_number().over(wq))
-            .filter(F.col("__rn") <= IVF_NPROBE)
-            .select("query_id", "__want", F.col("cid").alias("__pcid"))
-        )
+        probes = similarity._probe_table(
+            q, cb, IVF_NPROBE, ["query_id", "__want"]
+        ).select("query_id", "__want", F.col("cid").alias("__pcid"))
         ucand = assigned.join(
             F.broadcast(probes), F.col("centroid_id") == F.col("__pcid")
         ).filter(F.col("query_id") != F.col("doc"))

@@ -538,14 +538,8 @@ def minhash_precision_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sa = sigs.select(F.col("doc").alias("id_a"), F.col("minhash").alias("mh_a"))
     sb = sigs.select(F.col("doc").alias("id_b"), F.col("minhash").alias("mh_b"))
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("mh_a"), F.col("mh_b"), lambda x, y: x == y),
-                lambda e: e,
-            )
-        ).cast("double")
-        / F.lit(float(MH_HASHES))
+    est = dedup._slot_agreement(F.col("mh_a"), F.col("mh_b")).cast("double") / F.lit(
+        float(MH_HASHES)
     )
     estimated = (
         cands.join(sa, "id_a").join(sb, "id_b").select(
