@@ -23,7 +23,9 @@ UDFs in functions/fast_text.py (bit-identical to ``with_minhash`` /
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import operator
+from collections.abc import Callable, Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -235,6 +237,41 @@ def batch_minus_store(
     if not store_unique_keys:
         hits = hits.distinct()
     return batch.join(F.broadcast(hits), keys, "left_anti")
+
+
+def _batch_pairs(
+    batch: DataFrame,
+    history: DataFrame,
+    keys: Sequence[str],
+    payload: str,
+    score: Callable[[Column, Column], Column],
+) -> DataFrame:
+    """``(id_a, id_b, score)`` for every bucket-sharing pair that
+    touches a NEW batch — the pairing rule of every incremental near-dup
+    ingest (MinHash bands, pHash bands, SemDeDup centroids).
+
+    ``batch`` (persisted by the caller) and ``history`` are bucketed
+    tables with the same columns: ``doc``, the ``keys`` and the
+    ``payload`` that ``score`` compares. ONE join does both the
+    within-batch and the batch-vs-history pairing:
+    ``broadcast(batch) AS n ⋈ (history ∪ batch) AS h``, so the store
+    streams through one scan and is never shuffled (a shuffle join
+    re-exchanges the whole store every batch: O(store) network per
+    ingest). A within-batch pair (a, b) arrives twice — (n=a, h=b) and
+    (n=b, h=a) — with the same ids after least/greatest and the same
+    value of the symmetric ``score``; the caller's final ``distinct``
+    collapses it. ``score`` gets the n and h payload columns and
+    returns the named score column."""
+    n, h = F.broadcast(batch).alias("n"), history.unionByName(batch).alias("h")
+    cond = [F.col(f"n.{k}") == F.col(f"h.{k}") for k in keys]
+    # self guard — also the replay guard: a re-ingested id must not
+    # pair with its own historical row (id_a == id_b, a perfect score)
+    cond.append(F.col("n.doc") != F.col("h.doc"))
+    return n.join(h, reduce(operator.and_, cond)).select(
+        F.least(F.col("n.doc"), F.col("h.doc")).alias("id_a"),
+        F.greatest(F.col("n.doc"), F.col("h.doc")).alias("id_b"),
+        score(F.col(f"n.{payload}"), F.col(f"h.{payload}")),
+    )
 
 
 def incremental_exact_dedup(
@@ -537,9 +574,9 @@ def minhash_near_duplicates(
 
 
 def release_caches(frames: list) -> None:
-    """Unpersist every frame collected through a ``cache_into`` list
-    (banded_pairs / incremental_minhash_near_duplicates), emptying the
-    list — the explicit cache-lifetime bound for long-lived sessions."""
+    """Unpersist every frame collected through a ``cache_into`` list,
+    emptying the list — the explicit cache-lifetime bound for
+    long-lived sessions."""
     while frames:
         frames.pop().unpersist()
 
@@ -640,53 +677,27 @@ def incremental_minhash_near_duplicates(
     batch's fresh band rows, not ``updated_banded`` (which is the full
     union and would duplicate history on append) — pass ``fresh_into``
     (a list, same style as ``cache_into``) to receive that fresh-only
-    frame. Per batch this shuffles only the batch's bands and
-    equi-joins the (partitionable-by-band/key) store — history text is
-    never re-read. Results equal a full recompute over the union
-    corpus, restricted to pairs touching the new batch.
+    frame. Per batch only the batch's bands are broadcast and the
+    banded store streams through one scan (:func:`_batch_pairs`) —
+    history text is never re-read. Results equal a full recompute over
+    the union corpus, restricted to pairs touching the new batch.
     """
     sigs = _minhash_sigs(
         new_df, text_col, id_col, num_hashes=num_hashes, shingle_n=shingle_n
     )
-    # three consumers (within l/r, versus); see banded_pairs
+    # three consumers (the broadcast side, the union side, the
+    # fresh-row probe); see banded_pairs
     new_banded = _minhash_bands(sigs, "minhash", num_hashes, bands).persist()
     if cache_into is not None:
         cache_into.append(new_banded)
 
     def est(a, b):
-        return _slot_agreement(a, b).cast("double") / F.lit(float(num_hashes))
+        return (
+            _slot_agreement(a, b).cast("double") / F.lit(float(num_hashes))
+        ).alias("est_jaccard")
 
-    # ingest orientation (the batch_minus_store/SemDeDup rule): the
-    # batch is the small side — broadcast it on the self-join and the
-    # history join so the banded STORE streams through one scan and is
-    # never shuffled (a shuffle join re-exchanges the whole store
-    # every batch: O(store) network per ingest)
-    l, r = new_banded.alias("l"), F.broadcast(new_banded).alias("r")
-    within = l.join(
-        r,
-        (F.col("l.band") == F.col("r.band"))
-        & (F.col("l.key") == F.col("r.key"))
-        & (F.col("l.doc") < F.col("r.doc")),
-    ).select(
-        F.col("l.doc").alias("id_a"),
-        F.col("r.doc").alias("id_b"),
-        est(F.col("l.minhash"), F.col("r.minhash")).alias("est_jaccard"),
-    )
-    n, h = F.broadcast(new_banded).alias("n"), seen_banded.alias("h")
-    versus = n.join(
-        h,
-        (F.col("n.band") == F.col("h.band"))
-        & (F.col("n.key") == F.col("h.key"))
-        # replay guard: a doc_id re-ingested after a failure must not
-        # pair with its own historical signature (id_a==id_b, est=1.0)
-        & (F.col("n.doc") != F.col("h.doc")),
-    ).select(
-        F.least(F.col("h.doc"), F.col("n.doc")).alias("id_a"),
-        F.greatest(F.col("h.doc"), F.col("n.doc")).alias("id_b"),
-        est(F.col("n.minhash"), F.col("h.minhash")).alias("est_jaccard"),
-    )
     pairs = (
-        within.unionByName(versus)
+        _batch_pairs(new_banded, seen_banded, ["band", "key"], "minhash", est)
         .filter(F.col("est_jaccard") >= threshold)
         .distinct()
     )

@@ -35,7 +35,7 @@ from typing import Callable
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -1688,48 +1688,22 @@ def phash_hamming_pairs(
     """
     if impl not in ("arrow", "join"):
         raise ValueError(f"impl {impl!r}: arrow or join")
-    mask = F.lit(0xFFFF)
-    bandvals = [
-        F.shiftrightunsigned(F.col("h_hi"), 16).bitwiseAND(mask),
-        F.col("h_hi").bitwiseAND(mask),
-        F.shiftrightunsigned(F.col("h_lo"), 16).bitwiseAND(mask),
-        F.col("h_lo").bitwiseAND(mask),
-    ]
-    band_struct = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(b).alias("band"), v.alias("key"))
-                for b, v in enumerate(bandvals)
-            ]
-        )
-    ).alias("bk")
     if impl == "join":
         from .dedup import banded_pairs
 
-        exploded = hashes.select(
-            F.col("media_id").alias("doc"),
-            F.struct("h_hi", "h_lo").alias("ph"),
-            band_struct,
-        ).select(
-            "doc", "ph", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+        pairs = banded_pairs(
+            _phash_banded(hashes), payload_col="ph", cache_into=cache_into
         )
-        pairs = banded_pairs(exploded, payload_col="ph", cache_into=cache_into)
-        ham = (
-            F.bit_count(F.col("ph_a.h_hi").bitwiseXOR(F.col("ph_b.h_hi")))
-            + F.bit_count(F.col("ph_a.h_lo").bitwiseXOR(F.col("ph_b.h_lo")))
-        ).cast("long")
         return (
-            pairs.select("id_a", "id_b", ham.alias("hamming"))
+            pairs.select(
+                "id_a", "id_b",
+                _hamming(F.col("ph_a"), F.col("ph_b")).alias("hamming"),
+            )
             .filter(F.col("hamming") <= max_distance)
             .distinct()  # a close pair can share several bands
         )
 
-    exploded = hashes.select(
-        F.col("media_id").alias("doc"), "h_hi", "h_lo", band_struct
-    ).select(
-        "doc", "h_hi", "h_lo",
-        F.col("bk.band").alias("band"), F.col("bk.key").alias("key"),
-    )
+    exploded = _phash_banded(hashes, payload=None)
     # EXPLICIT partition count (the plant_phash_corpus lesson): the
     # banded table is only ~8 MB at sf0.1, so AQE's size-based
     # coalescing folds the groupBy exchange to ONE post-shuffle
@@ -2284,11 +2258,16 @@ def rgb_phash_batch(df: DataFrame) -> DataFrame:
     return df.mapInPandas(fn, RGB_PHASH_SCHEMA)
 
 
-def _phash_banded(hashes: DataFrame) -> DataFrame:
-    """(media_id, h_hi, h_lo) → 4 rows of (doc, ph, band, key): the
-    16-bit band explosion shared by the self-join and the incremental
-    versus-join (banding is arithmetic, so the persisted store stays
-    plain hashes and bands on read — a narrow projection)."""
+def _phash_banded(
+    hashes: DataFrame, *, doc: str = "doc", payload: str | None = "ph"
+) -> DataFrame:
+    """(media_id, h_hi, h_lo) → 4 rows of (doc, payload, band, key):
+    the 16-bit band explosion every pHash band join is built from — by
+    pigeonhole, two hashes within Hamming distance 3 agree on at least
+    one band. ``payload`` names the (h_hi, h_lo) struct each row
+    carries; ``None`` carries plain ``h_hi``/``h_lo`` columns instead.
+    Banding is arithmetic, so a persisted store stays plain hashes and
+    bands on read — a narrow projection."""
     mask = F.lit(0xFFFF)
     bandvals = [
         F.shiftrightunsigned(F.col("h_hi"), 16).bitwiseAND(mask),
@@ -2296,9 +2275,11 @@ def _phash_banded(hashes: DataFrame) -> DataFrame:
         F.shiftrightunsigned(F.col("h_lo"), 16).bitwiseAND(mask),
         F.col("h_lo").bitwiseAND(mask),
     ]
+    carry = ["h_hi", "h_lo"] if payload is None else [payload]
+    packed = carry if payload is None else [F.struct("h_hi", "h_lo").alias(payload)]
     return hashes.select(
-        F.col("media_id").alias("doc"),
-        F.struct("h_hi", "h_lo").alias("ph"),
+        F.col("media_id").alias(doc),
+        *packed,
         F.explode(
             F.array(
                 *[
@@ -2307,7 +2288,15 @@ def _phash_banded(hashes: DataFrame) -> DataFrame:
                 ]
             )
         ).alias("bk"),
-    ).select("doc", "ph", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    ).select(doc, *carry, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+
+
+def _hamming(a: Column, b: Column) -> Column:
+    """Hamming distance of two (h_hi, h_lo) pHash structs, as a long."""
+    return (
+        F.bit_count(a["h_hi"].bitwiseXOR(b["h_hi"]))
+        + F.bit_count(a["h_lo"].bitwiseXOR(b["h_lo"]))
+    ).cast("long")
 
 
 def incremental_phash_near_duplicates(
@@ -2339,53 +2328,22 @@ def incremental_phash_near_duplicates(
     never re-runs the decode/hash lineage under ``new_hashes`` a second
     time just to compute the store delta (measured a full duplicate
     phash pass at the 1:10 ingest bench)."""
+    from .dedup import _batch_pairs, batch_minus_store
+
     nb = _phash_banded(new_hashes).persist()
     if cache_into is not None:
         cache_into.append(nb)
-    ham = (
-        F.bit_count(F.col("a_ph.h_hi").bitwiseXOR(F.col("b_ph.h_hi")))
-        + F.bit_count(F.col("a_ph.h_lo").bitwiseXOR(F.col("b_ph.h_lo")))
-    ).cast("long")
-    # ingest orientation (the batch_minus_store/SemDeDup rule): the
-    # batch is the small side — broadcast it on both joins so the
-    # banded store streams through one scan and is never shuffled
-    l, r = nb.alias("l"), F.broadcast(nb).alias("r")
-    within = l.join(
-        r,
-        (F.col("l.band") == F.col("r.band"))
-        & (F.col("l.key") == F.col("r.key"))
-        & (F.col("l.doc") < F.col("r.doc")),
-    ).select(
-        F.col("l.doc").alias("id_a"),
-        F.col("r.doc").alias("id_b"),
-        F.col("l.ph").alias("a_ph"),
-        F.col("r.ph").alias("b_ph"),
-    )
-    hb = _phash_banded(seen_hashes).alias("h")
-    versus = F.broadcast(nb).alias("n").join(
-        hb,
-        (F.col("n.band") == F.col("h.band"))
-        & (F.col("n.key") == F.col("h.key"))
-        # replay guard: a re-ingested id must not pair with itself
-        & (F.col("n.doc") != F.col("h.doc")),
-    ).select(
-        F.least(F.col("n.doc"), F.col("h.doc")).alias("id_a"),
-        F.greatest(F.col("n.doc"), F.col("h.doc")).alias("id_b"),
-        F.when(F.col("n.doc") < F.col("h.doc"), F.col("n.ph"))
-        .otherwise(F.col("h.ph"))
-        .alias("a_ph"),
-        F.when(F.col("n.doc") < F.col("h.doc"), F.col("h.ph"))
-        .otherwise(F.col("n.ph"))
-        .alias("b_ph"),
-    )
     pairs = (
-        within.unionByName(versus)
-        .select("id_a", "id_b", ham.alias("hamming"))
+        _batch_pairs(
+            nb,
+            _phash_banded(seen_hashes),
+            ["band", "key"],
+            "ph",
+            lambda a, b: _hamming(a, b).alias("hamming"),
+        )
         .filter(F.col("hamming") <= max_distance)
         .distinct()
     )
-    from .dedup import batch_minus_store
-
     # O(batch) store-freshness check — the store is scanned, never
     # shuffled (batch_minus_store docstring). Re-derive the plain
     # (media_id, h_hi, h_lo) rows from the PERSISTED banded frame
@@ -3301,46 +3259,14 @@ def cross_phash_hamming_pairs(
         )
 
     def banded(h: DataFrame, idc: str) -> DataFrame:
-        mask = F.lit(0xFFFF)
-        bandvals = [
-            F.shiftrightunsigned(F.col("h_hi"), 16).bitwiseAND(mask),
-            F.col("h_hi").bitwiseAND(mask),
-            F.shiftrightunsigned(F.col("h_lo"), 16).bitwiseAND(mask),
-            F.col("h_lo").bitwiseAND(mask),
-        ]
-        return h.filter(
-            F.col("h_hi").isNotNull() & F.col("h_lo").isNotNull()
-        ).select(
-            F.col("media_id").alias(idc),
-            F.struct("h_hi", "h_lo").alias(f"__ph_{idc}"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(b).alias("band"), v.alias("key"))
-                        for b, v in enumerate(bandvals)
-                    ]
-                )
-            ).alias("bk"),
-        ).select(
-            idc,
-            f"__ph_{idc}",
-            F.col("bk.band").alias("band"),
-            F.col("bk.key").alias("key"),
+        return _phash_banded(
+            h.filter(F.col("h_hi").isNotNull() & F.col("h_lo").isNotNull()),
+            doc=idc,
+            payload=f"__ph_{idc}",
         )
 
     la, rb = banded(left, left_id), banded(right, right_id)
-    ham = (
-        F.bit_count(
-            F.col(f"__ph_{left_id}.h_hi").bitwiseXOR(
-                F.col(f"__ph_{right_id}.h_hi")
-            )
-        )
-        + F.bit_count(
-            F.col(f"__ph_{left_id}.h_lo").bitwiseXOR(
-                F.col(f"__ph_{right_id}.h_lo")
-            )
-        )
-    ).cast("long")
+    ham = _hamming(F.col(f"__ph_{left_id}"), F.col(f"__ph_{right_id}"))
     return (
         la.join(rb, ["band", "key"])
         .select(left_id, right_id, ham.alias("hamming"))

@@ -816,56 +816,31 @@ def incremental_semdedup_pairs_assigned(
     Same contract and return value.
 
     Join orientation is the ingest contract: the BATCH is small (one
-    micro-batch) and the STORE is the unbounded side, so both the
-    within-batch self-join and the batch-vs-history join BROADCAST the
-    batch — the store streams through one scan and is never shuffled.
-    Pre-r09 the history join was a shuffle join, re-exchanging the
-    whole store every epoch (quadratic total I/O over a stream's
-    life)."""
-    nb = assigned_batch.withColumn(
-        "__sub", F.pmod(F.col("doc"), F.lit(nsplits))
-    ).persist()
+    micro-batch) and the STORE is the unbounded side, so one join of
+    the broadcast batch against (store ∪ batch) pairs it within itself
+    and against history (:func:`..dedup._batch_pairs`) — the store
+    streams through one scan and is never shuffled."""
+    from .dedup import _batch_pairs, batch_minus_store
+
+    sub = F.pmod(F.col("doc"), F.lit(nsplits))
+    nb = assigned_batch.withColumn("__sub", sub).persist()
     if cache_into is not None:
         cache_into.append(nb)
-    cos = vectors.cosine
-    # ONE broadcast join does both the within-batch and the
-    # batch-vs-history pairing: the right side is (store ∪ batch), so
-    # a within-batch pair (a, b) arrives twice — (n=a, h=b) and
-    # (n=b, h=a) — and collapses under least/greatest + the final
-    # distinct, with the SAME cosine (the left-fold dot commutes
-    # element-wise, so orientation cannot skew the float). Pre-r10 the
-    # two cases were separate joins — an extra join + broadcast-build
-    # job per micro-batch epoch. The store is banded on read — __sub
-    # is pure arithmetic, no state; everything exchanged is
-    # batch-sized and the store still streams through one scan.
-    hb = (
-        seen_store.withColumn(
-            "__sub", F.pmod(F.col("doc"), F.lit(nsplits))
-        )
-        .unionByName(nb)
-        .alias("h")
-    )
+    # the store is bucketed on read — __sub is pure arithmetic, no
+    # state; the left-fold dot commutes element-wise, so the cosine is
+    # the same in both orientations of a within-batch pair
     pairs = (
-        F.broadcast(nb).alias("n")
-        .join(
-            hb,
-            (F.col("n.centroid_id") == F.col("h.centroid_id"))
-            & (F.col("n.__sub") == F.col("h.__sub"))
-            # self guard — also the replay guard: a re-ingested id
-            # must not pair with its own historical row
-            & (F.col("n.doc") != F.col("h.doc")),
-        )
-        .select(
-            F.least(F.col("n.doc"), F.col("h.doc")).alias("id_a"),
-            F.greatest(F.col("n.doc"), F.col("h.doc")).alias("id_b"),
-            cos(F.col("n.vec"), F.col("h.vec")).alias("cosine"),
+        _batch_pairs(
+            nb,
+            seen_store.withColumn("__sub", sub),
+            ["centroid_id", "__sub"],
+            "vec",
+            lambda a, b: vectors.cosine(a, b).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
         # dedups the doubled within-batch pairs AND replayed ids
         .distinct()
     )
-    from .dedup import batch_minus_store
-
     # O(batch) store-freshness check — the store is scanned, never
     # shuffled (batch_minus_store docstring). fresh reads the PERSISTED
     # assigned batch, so exposing it via ``fresh_into`` lets a caller

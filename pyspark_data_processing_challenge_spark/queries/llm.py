@@ -5243,8 +5243,7 @@ def _inc_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("node").cast("long").alias("doc_id"),
         F.col("component").cast("long").alias("component"),
     ).localCheckpoint()
-    for c in caches:
-        c.unpersist()
+    dedup.release_caches(caches)
     _CC_MEMO[key] = frame
     return frame
 

@@ -238,6 +238,34 @@ def bloom_decontam_ingest_sink(
     return sink
 
 
+def _prior_epochs(
+    spark: SparkSession, path: str, schema: str, epoch_id: int
+) -> DataFrame:
+    """The epoch-partitioned store at ``path`` as every epoch strictly
+    BEFORE ``epoch_id`` left it — the replay-safe state read of the
+    streaming ingest sinks: a replayed epoch sees exactly the prior
+    state it saw the first time. The declared ``schema`` (which must
+    include ``__epoch int``) skips footer schema inference over every
+    prior epoch's files; partition columns in it prune at the
+    directory level.
+
+    ONLY a missing store means "first epoch" and reads as an empty
+    frame of ``schema``. Any other read failure (transient FS error,
+    corrupt footer, permissions) re-raises so the batch fails and the
+    checkpoint retries it — swallowing it would silently drop the
+    store and write duplicates."""
+    try:
+        return (
+            spark.read.schema(schema)
+            .parquet(path)
+            .filter(F.col("__epoch") < F.lit(int(epoch_id)))
+        )
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" not in str(e):
+            raise
+        return spark.createDataFrame([], schema)
+
+
 MEDIA_STREAM_SCHEMA = "media_id long, payload binary"
 
 
@@ -248,9 +276,9 @@ def phash_ingest_sink(out_dir: str, *, max_distance: int = 3):
     cluster-split, Bloom screen): each media micro-batch decodes ONCE
     (operators/multimodal.phash_batch — real PNG/JPEG pixel decode +
     dHash), pairs against the persisted 16-byte-per-image hash store
-    via operators/multimodal.incremental_phash_near_duplicates (batch
-    broadcast on both joins, the store streams through one scan and is
-    NEVER re-decoded or shuffled), and commits the batch's near-dup
+    via operators/multimodal.incremental_phash_near_duplicates (one
+    join of the broadcast batch; the store streams through one scan and
+    is NEVER re-decoded or shuffled), and commits the batch's near-dup
     pairs plus its fresh hash rows in ONE kind-partitioned write:
     ``out_dir/__epoch=N/kind={pairs,hash}`` (the semdedup_ingest_sink
     layout — readers prune on the kind partition).
@@ -262,35 +290,25 @@ def phash_ingest_sink(out_dir: str, *, max_distance: int = 3):
     at-least-once delivery, including the pairing decision; the
     replay guard inside the incremental operator additionally keeps a
     re-ingested id from pairing with itself."""
+    from ..operators.dedup import release_caches
     from ..operators.multimodal import (
         incremental_phash_near_duplicates,
         phash_batch,
     )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            store = (
-                spark.read.schema(
-                    "media_id long, h_hi long, h_lo long,"
-                    " id_a long, id_b long, hamming long,"
-                    " kind string, __epoch int"
-                )
-                .parquet(out_dir)
-                .filter(
-                    (F.col("__epoch") < F.lit(epoch_id))
-                    & (F.col("kind") == "hash")
-                )
-                .select("media_id", "h_hi", "h_lo")
+        store = (
+            _prior_epochs(
+                batch_df.sparkSession,
+                out_dir,
+                "media_id long, h_hi long, h_lo long,"
+                " id_a long, id_b long, hamming long,"
+                " kind string, __epoch int",
+                epoch_id,
             )
-        except AnalysisException as e:
-            # ONLY a missing store means "first epoch" (see
-            # dedup_ingest_sink for why anything else must re-raise)
-            if "PATH_NOT_FOUND" not in str(e):
-                raise
-            store = spark.createDataFrame(
-                [], "media_id long, h_hi long, h_lo long"
-            )
+            .filter(F.col("kind") == "hash")
+            .select("media_id", "h_hi", "h_lo")
+        )
         hashes = phash_batch(batch_df).select("media_id", "h_hi", "h_lo")
         caches: list = []
         fresh_frames: list = []
@@ -311,8 +329,7 @@ def phash_ingest_sink(out_dir: str, *, max_distance: int = 3):
             .mode("overwrite")
             .parquet(f"{out_dir}/__epoch={int(epoch_id)}")
         )
-        for c in caches:
-            c.unpersist()
+        release_caches(caches)
 
     return sink
 
@@ -509,21 +526,9 @@ def dedup_ingest_sink(out_dir: str, fp_store_dir: str, cols=None):
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            store = (
-                spark.read.parquet(fp_store_dir)
-                .filter(F.col("__epoch") < F.lit(epoch_id))
-                .select("__fp0", "__fp1")
-            )
-        except AnalysisException as e:
-            # ONLY a missing store means "first epoch". Any other read
-            # failure (transient FS error, corrupt footer, permissions)
-            # must fail the batch so the checkpoint retries it —
-            # swallowing it would silently disable cross-batch dedup
-            # and write duplicates.
-            if "PATH_NOT_FOUND" not in str(e):
-                raise
-            store = spark.createDataFrame([], "__fp0 long, __fp1 long")
+        store = _prior_epochs(
+            spark, fp_store_dir, "__fp0 long, __fp1 long, __epoch int", epoch_id
+        ).select("__fp0", "__fp1")
         fresh, _ = incremental_exact_dedup(batch_df, store, cols, keep_fps=True)
         fresh = fresh.localCheckpoint()  # compute the dedup ONCE for both writes
         (
@@ -595,7 +600,10 @@ def cluster_split_ingest_sink(
     replayed epoch is byte-idempotent, including the pairing and the
     fold."""
     from ..operators.curation import split_assign
-    from ..operators.dedup import incremental_minhash_near_duplicates
+    from ..operators.dedup import (
+        incremental_minhash_near_duplicates,
+        release_caches,
+    )
     from ..operators.graph import incremental_components
 
     weights = list(weights)
@@ -603,35 +611,19 @@ def cluster_split_ingest_sink(
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            store_all = (
-                spark.read.schema(_CSPLIT_STORE_SCHEMA)
-                .parquet(store_dir)
-                .filter(F.col("__epoch") < F.lit(epoch_id))
-            )
-            sig_store = store_all.filter(F.col("kind") == "sig").select(
-                "doc", "minhash", "band", "key"
-            )
-            # bounded 1-row collect: which prior epoch holds the
-            # current label snapshot
-            last = store_all.filter(F.col("kind") == "comp").agg(
-                F.max("__epoch").alias("e")
-            ).collect()[0]["e"]
-            comp_store = (
-                store_all.filter(
-                    (F.col("kind") == "comp") & (F.col("__epoch") == last)
-                ).select("node", "component")
-                if last is not None
-                else spark.createDataFrame([], "node long, component long")
-            )
-        except AnalysisException as e:
-            # ONLY a missing store means "first epoch" (the
-            # dedup_ingest_sink contract) — anything else must fail
-            # the batch so the checkpoint retries it
-            if "PATH_NOT_FOUND" not in str(e):
-                raise
-            sig_store = spark.createDataFrame([], _CSPLIT_SIG_COLS)
-            comp_store = spark.createDataFrame([], "node long, component long")
+        store_all = _prior_epochs(spark, store_dir, _CSPLIT_STORE_SCHEMA, epoch_id)
+        sig_store = store_all.filter(F.col("kind") == "sig").select(
+            "doc", "minhash", "band", "key"
+        )
+        # bounded 1-row collect: which prior epoch holds the current
+        # label snapshot (None before the first commit, which then
+        # matches no row)
+        last = store_all.filter(F.col("kind") == "comp").agg(
+            F.max("__epoch").alias("e")
+        ).collect()[0]["e"]
+        comp_store = store_all.filter(
+            (F.col("kind") == "comp") & (F.col("__epoch") == last)
+        ).select("node", "component")
         caches: list = []
         fresh: list = []
         pairs, _ = incremental_minhash_near_duplicates(
@@ -682,8 +674,7 @@ def cluster_split_ingest_sink(
             .partitionBy("__epoch", "kind")
             .parquet(store_dir)
         )
-        for c in caches:
-            c.unpersist()
+        release_caches(caches)
 
     return sink
 
@@ -752,10 +743,9 @@ def semdedup_ingest_sink(
     store read never touches pairs files and vice versa):
     pairs = ``read.parquet(out_dir).filter(kind = 'pairs')``; the
     assignment store = ``filter(kind = 'assign')`` with the declared
-    store schema. Pre-r10 the sink committed pairs and assignments as
-    two separate jobs per epoch — two full job schedules + two parquet
-    commits for micro-batch-sized outputs was ~40% of the steady-state
-    epoch cost.
+    store schema. One commit, not one per kind: two job schedules + two
+    parquet commits for micro-batch-sized outputs cost ~40% of the
+    steady-state epoch.
 
     Replay safety (the dedup_ingest_sink contract): the store read
     FILTERS to epochs strictly before the current one, so a replayed
@@ -768,13 +758,12 @@ def semdedup_ingest_sink(
     bounded by contract — the batch operator broadcasts it) and baked
     into a single Arrow-batched assignment UDF
     (similarity.codebook_assign_udf, bit-identical to ivf_assign)
-    reused by every micro-batch. Pre-r09 the sink re-planned the
-    codebook join per epoch — re-scanning the centroid DataFrame's
-    lineage and re-broadcasting it every batch; the r09 Column-fold
-    form fixed that but still carried |codebook| ndarray Literal nodes
-    the analyzer re-walked every epoch job (~0.4 s/epoch at 64x64 —
-    the single-node UDF removes that too).
+    reused by every micro-batch — no per-epoch codebook join to
+    re-plan (re-scanning the centroid lineage and re-broadcasting it
+    every batch) and no |codebook| Literal nodes for the analyzer to
+    re-walk every epoch job (~0.4 s/epoch at 64x64).
     """
+    from ..operators.dedup import release_caches
     from ..operators.similarity import (
         codebook_assign_udf,
         incremental_semdedup_pairs_assigned,
@@ -786,38 +775,24 @@ def semdedup_ingest_sink(
     assign_udf = codebook_assign_udf(codebook)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
         # the store's vec type follows the STREAM's embedding element
         # type (the sink writes the batch's embedding column verbatim);
-        # a hardcoded array<float> made every post-epoch-0 read of an
-        # array<double> stream fail on parquet type mismatch (r9
-        # advice) — derive it from the live batch schema instead
+        # a hardcoded array<float> would fail every post-epoch-0 read of
+        # an array<double> stream on parquet type mismatch
         vec_t = batch_df.schema["embedding"].dataType.simpleString()
-        try:
-            store = (
-                # declared schema: skip per-epoch parquet footer
-                # schema inference over every prior epoch's files.
-                # kind is a PARTITION column, so the filter prunes at
-                # the directory level — pairs files are never opened.
-                spark.read.schema(
-                    f"doc long, vec {vec_t}, centroid_id bigint,"
-                    " kind string, __epoch int"
-                )
-                .parquet(out_dir)
-                .filter(
-                    (F.col("__epoch") < F.lit(epoch_id))
-                    & (F.col("kind") == "assign")
-                )
-                .select("doc", "vec", "centroid_id")
+        # kind is a PARTITION column, so the filter prunes at the
+        # directory level — pairs files are never opened
+        store = (
+            _prior_epochs(
+                batch_df.sparkSession,
+                out_dir,
+                f"doc long, vec {vec_t}, centroid_id bigint,"
+                " kind string, __epoch int",
+                epoch_id,
             )
-        except AnalysisException as e:
-            # ONLY a missing store means "first epoch" (see
-            # dedup_ingest_sink for why anything else must re-raise)
-            if "PATH_NOT_FOUND" not in str(e):
-                raise
-            store = spark.createDataFrame(
-                [], f"doc long, vec {vec_t}, centroid_id bigint"
-            )
+            .filter(F.col("kind") == "assign")
+            .select("doc", "vec", "centroid_id")
+        )
         caches: list = []
         # A micro-batch arrives as ONE input split (file-source batch).
         # With the old interpreted Column fold that serialized ~2 s of
@@ -863,8 +838,7 @@ def semdedup_ingest_sink(
             .mode("overwrite")
             .parquet(f"{out_dir}/__epoch={int(epoch_id)}")
         )
-        for c in caches:
-            c.unpersist()
+        release_caches(caches)
 
     return sink
 
@@ -907,21 +881,12 @@ def ivfpq_ingest_sink(
     enc = ivfpq_encode_udf(coarse, pq, m=m, dsub=dsub)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            store_ids = (
-                spark.read.schema(
-                    "doc long, centroid_id bigint, codes array<int>,"
-                    " __epoch int"
-                )
-                .parquet(out_dir)
-                .filter(F.col("__epoch") < F.lit(int(epoch_id)))
-                .select("doc")
-            )
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e):
-                raise
-            store_ids = spark.createDataFrame([], "doc long")
+        store_ids = _prior_epochs(
+            batch_df.sparkSession,
+            out_dir,
+            "doc long, centroid_id bigint, codes array<int>, __epoch int",
+            epoch_id,
+        ).select("doc")
         batch = batch_df.select(
             F.col("vec_id").alias("doc"), F.col("embedding").alias("vec")
         ).dropDuplicates(["doc"])
